@@ -111,17 +111,28 @@ def release_caches(spark) -> int:
     """Unpersist every tracked per-query cache handle of the LIVE
     session (lazy unpersist — safe even while a returned frame is
     still unmaterialized, at the price of recomputation). Returns the
-    number of handles released. Call between unrelated workloads in a
-    long-lived host; the driver's per-process runs never need it."""
+    number of handles actually released. Call between unrelated
+    workloads in a long-lived host; the driver's per-process runs
+    never need it.
+
+    If the JVM SparkContext has stopped under this live session handle
+    (e.g. shut down after a fatal error), ``unpersist`` raises a
+    ``Py4JJavaError`` (the block manager is gone) and the caches went
+    with it: those handles are dropped from tracking and not counted.
+    Any other error propagates."""
+    from py4j.protocol import Py4JJavaError
+
     app = _app_key(spark)
     n = 0
     for k in [k for k in _QUERY_PERSISTS if k[0] == app]:
         for df in _QUERY_PERSISTS.pop(k):
             try:
                 df.unpersist()
+            except Py4JJavaError:
+                if not spark.sparkContext._jsc.sc().isStopped():
+                    raise
+            else:
                 n += 1
-            except Exception:  # session already stopped — nothing to free
-                pass
     return n
 
 # ---------------------------------------------------------------------------

@@ -28,6 +28,10 @@ from pyspark.sql import functions as F
 
 __all__ = ["pagerank"]
 
+#: loop partition sizing: the pinned loop partitioning holds about this
+#: many nodes per partition, capped at the session parallelism.
+NODES_PER_PARTITION = 65536
+
 
 def pagerank(
     edges: DataFrame,
@@ -61,6 +65,20 @@ def pagerank(
     Edge/degree frames are computed once and persisted; rank frames
     are checkpointed every ``checkpoint_every`` iterations to keep the
     plan flat.
+
+    Loop partitioning is sized by NODE count (about
+    ``NODES_PER_PARTITION`` nodes per partition, capped at the session
+    parallelism). LIMITATION: a dense graph (edges ≫ nodes, e.g. a
+    near-clique over few vertices) computes edge-sized contribution
+    maps at that node-sized parallelism, and no option overrides it.
+
+    Fixed mode requires a single-threaded session: for the loop's
+    duration it sets the session-global ``spark.sql.adaptive.enabled``
+    to false and ``spark.sql.shuffle.partitions`` to the loop's
+    partition count, restoring both afterwards. A query planned
+    concurrently from another thread on the same SparkSession would
+    run under those values, so call fixed-mode pagerank from the thread
+    that owns the session.
     """
     from pyspark.storagelevel import StorageLevel
 
@@ -94,26 +112,16 @@ def pagerank(
         )
         nodes_raw.unpersist()  # the early return must not leak the cache
         return empty
-    # loop partition count, derived from the graph's own size (guide
-    # §2 — scale-adaptive, not a constant): enough partitions that each
-    # holds ~rowsPerPartition nodes, capped at the session parallelism.
-    # At sf0.1 (1.2k nodes) that is ONE partition — every per-iteration
-    # exchange moves one buffer instead of launching 32 near-empty
-    # tasks; at a billion-node graph the cap makes it defaultParallelism
-    # exactly as before. Conf-overridable; 0 pins the old
-    # parallelism-sized behavior. LIMITATION: the count sizes the loop
-    # by NODES; a dense graph (edges ≫ nodes, e.g. a near-clique over
-    # few vertices) computes edge-sized contribution maps at this
-    # node-sized parallelism — set the conf to 0 (or a small
-    # rowsPerPartition) for that shape.
-    try:
-        rows_per = int(
-            spark.conf.get("spark_graft.graph.rowsPerPartition", "65536")
-        )
-    except ValueError:
-        rows_per = 65536
+    # loop partition count, derived from the graph's own size
+    # (scale-adaptive, not a constant): enough partitions that each
+    # holds ~NODES_PER_PARTITION nodes, capped at the session
+    # parallelism. At sf0.1 (1.2k nodes) that is ONE partition — every
+    # per-iteration exchange moves one buffer instead of launching 32
+    # near-empty tasks; at a billion-node graph the cap makes it
+    # defaultParallelism. The count sizes the loop by NODES (see the
+    # dense-graph limitation in the docstring).
     par = max(spark.sparkContext.defaultParallelism, 2)
-    p_n = par if rows_per <= 0 else max(1, min(par, n // rows_per + 1))
+    p_n = max(1, min(par, n // NODES_PER_PARTITION + 1))
     # the pinned node frame reads the already-cached distinct (one
     # node-sized exchange, no recompute)
     nodes = nodes_raw.repartition(p_n, "node").persist(

@@ -837,12 +837,12 @@ def lsh_buckets(
         n_planes = auto_n_planes(emb.count())
     planes = hyperplanes(n_planes, dim)
     q = quantized(emb)
-    # Deliberately UNROLLED per plane (vs with_cells' single-transform
-    # literal): the bucketed frame is SELF-joined by every consumer
-    # (queries side vs candidate side), and an outer attribute
-    # referenced inside a nested lambda (`__q` under transform→
-    # zip_with) breaks Spark 4.1's self-join attribute dedup at bind
-    # time (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND). Top-level zip_with
+    # Deliberately UNROLLED per plane (vs one transform over an
+    # array-of-planes literal): the bucketed frame is SELF-joined by
+    # every consumer (queries side vs candidate side), and an outer
+    # attribute referenced inside a nested lambda (`__q` under
+    # transform→zip_with) breaks Spark 4.1's self-join attribute dedup
+    # at bind time (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND). Top-level zip_with
     # folds bind fine, and plan size is bounded by the _MAX_PLANES=24
     # clamp, so unrolling costs at most 24 fold expressions.
     bucket = None
@@ -1379,11 +1379,6 @@ _SQDIST = (
 _SQDIST_DUCK = "list_sum(list_transform(range(1, {n} + 1), i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i])))"
 
 
-def _quantize_py(vec) -> list[int]:
-    """Driver-side twin of :func:`quantized` (micro-unit integers)."""
-    return [int(round(float(x) * _SCALE)) for x in vec]
-
-
 def _quantize_finite_sample(vecs) -> list[list[int]]:
     """Quantize a codebook training sample, SKIPPING poison vectors
     (NULL, or containing NULL/NaN/Inf) — the driver-side twin of
@@ -1493,76 +1488,55 @@ def _lit_arr_spark(vals: list[int]) -> str:
     return "array(" + ", ".join(f"{v}L" for v in vals) + ")"
 
 
+def _require_codebook(centroids: list[list[int]], ctx: str) -> None:
+    """Refuse an empty IVF codebook at plan build: with no centroid
+    there is no cell to assign or probe (an empty literal array is
+    ``array<null>`` and fails analysis; a zero-width scorer would
+    silently hand every row a NULL cell)."""
+    if not centroids:
+        raise ValueError(
+            f"{ctx}: empty IVF codebook — centroids must hold at least "
+            "one centroid (train one with ivf_codebook)"
+        )
+
+
 def with_cells(q: DataFrame, centroids: list[list[int]]) -> DataFrame:
-    """Assign each quantized vector to its nearest centroid (``cell``).
+    """Assign each quantized vector to its nearest centroid (``cell``)
+    with a vectorized ``mapInArrow`` batch scorer.
 
-    A fused argmin in ONE projection — no row amplification (the k×
-    crossJoin shape would shuffle k copies of a 100-TB corpus). The
-    k distances come from a single ``transform`` over one
-    array-of-centroids literal rather than k separately-built
-    ``aggregate`` expressions: the arithmetic per row is identical (a
-    runtime loop over k instead of a k-wide expression tree), but the
-    plan carries ONE distance expression however large k grows —
-    measured 1.40s → 0.51s cold on the assignment subplan at k=16
-    (plan compile/init, the dominant cost of a fresh query; a k≈√N
-    codebook at real scale would otherwise inline thousands of fold
-    expressions). Ties break to the lowest cell id (``array_position``
-    finds the first minimum), and distances are exact integers, so the
-    DuckDB twin's row_number-over-distance assignment picks identical
-    cells.
-    """
-    cents = F.expr(
-        "array(" + ", ".join(_lit_arr_spark(c) for c in centroids) + ")"
-    )
-    dists = F.transform(
-        cents,
-        lambda c: F.aggregate(
-            F.zip_with(F.col("__q"), c, lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        ),
-    )
-    return q.withColumn(
-        "cell", (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-    )
+    A fused argmin per row — no row amplification (the k× crossJoin
+    shape would shuffle k copies of the corpus) — computed as one int64
+    matrix product per Arrow batch. Two measured costs rule out the
+    pure-expression form (k ``zip_with``/``aggregate`` folds over an
+    array-of-centroids literal) on the corpus-sized INDEX side:
 
-
-def with_cells_arrow(q: DataFrame, centroids: list[list[int]]) -> DataFrame:
-    """:func:`with_cells` as a vectorized ``mapInArrow`` batch scorer
-    (round 19 — guide §4.2): same integer arithmetic, same output.
-
-    Why it exists — two measured costs of the expression form on the
-    INDEX side (the corpus-sized one):
-
-    - the k×dim ``zip_with``/``aggregate`` folds are interpreted, not
-      codegen'd: ~2.5 CPU-seconds per 2k rows at k=16/dim=64, and the
-      per-row cost grows linearly in k (a k≈√N codebook at real scale
-      multiplies it);
+    - higher-order folds are interpreted, not codegen'd: ~2.5
+      CPU-seconds per 2k rows at k=16/dim=64, growing linearly in k
+      (a k≈√N codebook at real scale multiplies it);
     - the downstream cell equi-join infers ``isnotnull(cell)``, and
-      Catalyst pushes that filter below the scan-side exchange with
-      the ENTIRE quantize+assign chain duplicated into it (the guide
-      §4.4 trap, pure-JVM form) — measured 1.4s single-task at sf0.1.
-      ``mapInArrow`` is opaque to filter pushdown, so the inferred
-      filter stays above the exchange and the chain runs exactly once.
+      Catalyst pushes that filter below the scan-side exchange with the
+      ENTIRE quantize+assign chain duplicated into it — measured 1.4s
+      single-task at sf0.1. ``mapInArrow`` is opaque to filter
+      pushdown, so the inferred filter stays above the exchange and
+      the chain runs exactly once.
 
     Exactness: the distances are pure int64 arithmetic (numpy int64 ==
-    JVM long, overflow excluded by :func:`_q_elem_bound` by the same
-    argument the expression form relies on) and ``argmin`` takes the
-    FIRST minimum — identical tie-break to ``array_position`` of the
-    min. No float enters the assignment. Null semantics mirror the
-    fold exactly: a NULL ``__q``, a NULL element, or a width other
-    than the codebook's all make every per-centroid fold NULL on the
-    JVM side, so the row gets a NULL cell here too (slow path).
-    Gate: session conf ``spark_graft.ivf.arrowAssign=false`` restores
-    the expression form (:func:`ivf_index` reads it).
+    JVM long; :func:`_q_elem_bound` keeps dim·(2B)² within 2⁶³−1) and
+    ``argmin`` takes the FIRST minimum, so ties break to the lowest
+    cell id. No float enters the assignment, and the DuckDB twin's
+    row_number-over-distance assignment (:func:`ann_ivf_topk_sql`)
+    picks identical cells. A NULL ``__q``, a NULL element, or a width
+    other than the codebook's gets a NULL cell (slow path), which the
+    probe equi-join never matches.
 
-    Pass only the columns the consumer needs before calling (guide
-    §4.1) — the batch crosses the Python boundary both ways.
+    Pass only the columns the consumer needs before calling — the
+    batch crosses the Python boundary both ways.
     """
     from pyspark.sql import types as T
 
+    _require_codebook(centroids, "with_cells")
     cents = [[int(v) for v in c] for c in centroids]
-    dim = len(cents[0]) if cents else 0
+    dim = len(cents[0])
     out_schema = T.StructType(
         list(q.schema.fields) + [T.StructField("cell", T.IntegerType(), True)]
     )
@@ -1579,7 +1553,7 @@ def with_cells_arrow(q: DataFrame, centroids: list[list[int]]) -> DataFrame:
             col = batch.column(qi)
             n = len(col)
             fast = False
-            if n and col.null_count == 0 and dim:
+            if n and col.null_count == 0:
                 lens = pc.list_value_length(col).to_numpy(
                     zero_copy_only=False
                 )
@@ -1635,26 +1609,9 @@ def ivf_index(emb: DataFrame, centroids: list[list[int]]) -> DataFrame:
     on mismatch — a same-shape-but-different codebook would silently
     route probes to the wrong cells. Survives a parquet round-trip.
     """
-    # assignment strategy (round 19): the vectorized mapInArrow scorer
-    # by default — it is the guide-§4.2 shape for the corpus-sized
-    # side (interpreted k×dim folds off the per-row path, and opaque
-    # to the §4.4 inferred-isnotnull pushdown duplication); the
-    # session conf restores the pure-expression form for comparison
-    # or for Python-worker-free deployments.
-    use_arrow = (
-        str(
-            emb.sparkSession.conf.get("spark_graft.ivf.arrowAssign", "true")
-        ).lower()
-        != "false"
-    )
-    if use_arrow:
-        idx = with_cells_arrow(
-            quantized(emb).select("vec_id", "__q", "__norm"), centroids
-        ).select("vec_id", "cell", "__q", "__norm")
-    else:
-        idx = with_cells(quantized(emb), centroids).select(
-            "vec_id", "cell", "__q", "__norm"
-        )
+    idx = with_cells(
+        quantized(emb).select("vec_id", "__q", "__norm"), centroids
+    ).select("vec_id", "cell", "__q", "__norm")
     return _stamp_index(idx, "cell", _codebook_stamp(centroids))
 
 
@@ -1679,6 +1636,7 @@ def ivf_query(
     (even same-shape) raises loudly instead of silently routing
     probes to wrong cells.
     """
+    _require_codebook(centroids, "ivf_query")
     _check_stamp(
         _read_stamp(index, "cell"), "ivf_query", **_codebook_stamp(centroids)
     )
@@ -1859,9 +1817,9 @@ probes AS (
   WHERE prn <= {nprobe}
 ),
 assigned AS (
-  -- __q IS NOT NULL mirrors Spark's NULL-cell drop: a poison vector's
-  -- distance fold is NULL, array_position gives a NULL cell, and the
-  -- probe equi-join never sees the row (similarity.py with_cells)
+  -- __q IS NOT NULL mirrors Spark's NULL-cell drop: with_cells gives a
+  -- poison vector (NULL, NULL-holding, wrong width) a NULL cell, and
+  -- the probe equi-join never sees the row
   SELECT vec_id, __q, cell FROM (
     SELECT z.vec_id, z.__q, c.cell,
            row_number() OVER (PARTITION BY z.vec_id
@@ -2026,7 +1984,6 @@ ORDER BY query_id, rn
 def rp_project(
     emb: DataFrame,
     out_dim: int = 16,
-    impl: str = "arrow",
     max_rows_per_task: int | None = None,
     dim: int | None = None,
     validate_dim: bool = True,
@@ -2048,15 +2005,16 @@ def rp_project(
     expectation; measured recall@10 vs brute force is the --rp
     probe's output, and the shortlist multiplier is the recall knob.
 
-    TWO IMPLEMENTATIONS, identical output (parity-pinned):
-    ``impl="arrow"`` (default) quantizes JVM-side, then runs the
-    projection as ONE int64 matrix product per Arrow batch in numpy —
-    higher-order folds are interpreted (never whole-stage-codegen'd),
-    and 32 folds/row measured ~4s for just 2000×64 vectors, while the
-    batched matmul is effectively free; integer matmul is exact, so
-    nothing changes cross-engine. ``impl="fold"`` is the pure-JVM
-    expression path — the witness that pins the arithmetic without
-    Python in the loop.
+    Quantization runs JVM-side; the projection runs as ONE int64
+    matrix product per Arrow batch in numpy (a pandas UDF).
+    Higher-order folds are interpreted (never whole-stage-codegen'd):
+    an expression form with one fold per output coordinate measured
+    ~4s for just 2000×64 vectors, while the batched matmul is
+    effectively free. Integer matmul is exact, so the DuckDB twin's
+    list-fold projection (:func:`rp_cosine_topk_sql`) matches it
+    value for value. A NULL embedding, a NULL/non-finite/out-of-bound
+    element or a ragged width projects to a NULL ``rp`` (not an array
+    of NULL coordinates).
 
     ``max_rows_per_task`` (round 15 — VERDICT r14 item 3) bounds the
     Arrow leg's per-task row count by construction: one count job,
@@ -2077,28 +2035,10 @@ def rp_project(
 
         n_parts = max(1, math.ceil(emb.count() / max_rows_per_task))
         q = q.repartition(n_parts)
-    return q.select("vec_id", _rp_expr(planes, impl).alias("rp"))
+    return q.select("vec_id", _rp_expr(planes).alias("rp"))
 
 
-def _rp_expr(planes: list[list[int]], impl: str):
-    if impl == "fold":
-        # unrolled per output coordinate (same Spark 4.1 self-join
-        # lambda bind rationale as lsh_buckets); poison embedding →
-        # NULL projection (not an array of NULL coordinates), the
-        # convention both impls share. Since r15 poison rows carry a
-        # NULL-holding ``__q`` (not a whole-NULL one), the whole-array
-        # NULL is keyed off the FIRST coordinate: a fold over any
-        # NULL-holding or NULL array is NULL, and a clean integer
-        # vector always yields a non-NULL dot — one duplicated fold
-        # (out_dim+1 total) instead of re-evaluating the norm at every
-        # reference like the v2 guard did.
-        coords = []
-        for plane in planes:
-            plane_lit = f"array({', '.join(str(v) + 'L' for v in plane)})"
-            coords.append(F.expr(_DOT.format(a="__q", b=plane_lit)))
-        return F.when(coords[0].isNotNull(), F.array(*coords))
-    if impl != "arrow":
-        raise ValueError(f"unknown impl {impl!r} (arrow | fold)")
+def _rp_expr(planes: list[list[int]]):
     import numpy as np
     import pandas as pd
 
@@ -2108,23 +2048,21 @@ def _rp_expr(planes: list[list[int]], impl: str):
         if qcol.empty:
             return pd.Series([], dtype=object)
         # Poison embeddings (whole-NULL ``__q`` OR NULL-holding since
-        # r15's unconditional quantization) project to NULL, matching
-        # the fold path (whose aggregate over a NULL-holding array is
-        # NULL) — parity-pinned. Arrow surfaces NULL elements as None
-        # in object lists or NaN in float64 arrays; both are caught.
+        # r15's unconditional quantization) project to NULL. Arrow
+        # surfaces NULL elements as None in object lists or NaN in
+        # float64 arrays; both are caught.
         def _clean(a):
             if a is None:
                 return None
             arr = np.asarray(a, dtype="float64")
             if arr.shape[0] != mat.shape[0]:
                 # a RAGGED row past the plan-build peek degrades to
-                # NULL (ADVICE r15 medium): the fold impl's zip_with
-                # NULL padding + __pn>0 filter silently degrades the
-                # same row, and _peek_dim's residual contract promises
-                # the shared NULL-never-matches path — raising here
-                # would let ONE corrupt row kill the whole job, the
-                # poison-row class r14 removed. The loud caller-bug
-                # case (whole-corpus width mismatch) is _peek_dim's.
+                # NULL (ADVICE r15 medium): _peek_dim's residual
+                # contract promises the shared NULL-never-matches
+                # path — raising here would let ONE corrupt row kill
+                # the whole job, the poison-row class r14 removed.
+                # The loud caller-bug case (whole-corpus width
+                # mismatch) is _peek_dim's.
                 return None
             if np.isnan(arr).any():
                 return None

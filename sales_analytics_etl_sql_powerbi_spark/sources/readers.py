@@ -206,10 +206,7 @@ def read_input(spark: SparkSession, path: str, sheet: int | str = 0) -> DataFram
     raise ValueError(f"Unsupported input extension: {ext!r} ({path})")
 
 
-#: Scan-spread default: do not create slices under this many rows.
-#: Overridable per session via ``spark_graft.scan.rowsPerSlice`` (``0``
-#: disables the spread entirely — the plan-shape tests that pin the
-#: at-scale contract use that).
+#: Scan-spread slice floor: do not create slices under this many rows.
 SPREAD_ROWS_PER_SLICE = 64
 
 
@@ -267,8 +264,8 @@ def spread_scan(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
       at scale this is a structural no-op and the scan keeps its
       pushdown/pruning shape.
     - otherwise round-robin repartition to
-      ``min(defaultParallelism, rows // rowsPerSlice)`` when that
-      beats the file's own parallelism. Catalyst pushes deterministic
+      ``min(defaultParallelism, rows // SPREAD_ROWS_PER_SLICE)`` when
+      that beats the file's own parallelism. Catalyst pushes deterministic
       filters and column pruning THROUGH a Repartition node, so
       ``PushedFilters``/``ReadSchema`` still reach the scan; the
       exchange moves only the pruned columns, and row-identical
@@ -276,19 +273,8 @@ def spread_scan(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
       in this package (content-addressed sampling, range-partitioned
       id generation, rounded/quantized aggregate surfaces).
 
-    ``spark_graft.scan.rowsPerSlice`` (session conf) overrides the
-    slice floor; ``0`` disables the spread.
+    A consumer opts out per call (``read_table(..., spread=False)``).
     """
-    try:
-        rows_per_slice = int(
-            spark.conf.get(
-                "spark_graft.scan.rowsPerSlice", str(SPREAD_ROWS_PER_SLICE)
-            )
-        )
-    except ValueError:
-        rows_per_slice = SPREAD_ROWS_PER_SLICE
-    if rows_per_slice <= 0:
-        return df
     layout = parquet_layout(path)
     if layout is None:
         return df
@@ -296,7 +282,7 @@ def spread_scan(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
     parallelism = spark.sparkContext.defaultParallelism
     if row_groups >= parallelism:
         return df
-    target = min(parallelism, rows // rows_per_slice)
+    target = min(parallelism, rows // SPREAD_ROWS_PER_SLICE)
     if target <= row_groups:
         return df
     return df.repartition(target)

@@ -28,6 +28,10 @@ DEFAULT_QUERIES = (
     "dedup_exact",
 )
 
+#: per-query child process limit (seconds); a query that exceeds it
+#: is recorded as None
+QUERY_TIMEOUT_S = 900
+
 _CHILD = r"""
 import sys, time
 sys.path.insert(0, {repo!r})
@@ -68,20 +72,25 @@ def main() -> None:
     out: dict[str, float | None] = {}
     for name in names:
         code = _CHILD.format(repo=REPO, cpus=cpus, name=name, sf=sf)
-        r = subprocess.run(
-            [sys.executable, "-c", code],
-            capture_output=True,
-            text=True,
-            timeout=900,
-        )
         sec = None
-        for line in r.stdout.splitlines():
-            if line.startswith("FRESH_SEC"):
-                sec = float(line.split()[1])
+        try:
+            r = subprocess.run(
+                [sys.executable, "-c", code],
+                capture_output=True,
+                text=True,
+                timeout=QUERY_TIMEOUT_S,
+            )
+        except subprocess.TimeoutExpired:
+            # a hung query records None; the sweep goes on
+            print(f"{name}: timed out after {QUERY_TIMEOUT_S}s", file=sys.stderr)
+        else:
+            for line in r.stdout.splitlines():
+                if line.startswith("FRESH_SEC"):
+                    sec = float(line.split()[1])
+            if sec is None:
+                print(r.stderr[-2000:], file=sys.stderr)
         out[name] = sec
         print(f"{name}: fresh_sec={sec}")
-        if sec is None:
-            print(r.stderr[-2000:], file=sys.stderr)
     with open(out_path, "w") as f:
         json.dump({"sf_dir": sf, "cpus": int(cpus), "fresh_sec": out}, f, indent=1)
     print(f"wrote {out_path}")

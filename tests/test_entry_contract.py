@@ -81,3 +81,78 @@ def test_release_caches_unpersists_tracked_handles(spark):
         assert not h.storageLevel.useMemory  # unpersisted
     # the query still computes correctly afterwards (lazy recompute)
     assert E._RAW_QUERIES["customer_dim_repair"](spark, sf).count() > 0
+
+
+def test_release_caches_propagates_unrelated_errors(spark):
+    """Only the stopped-session error is absorbed: a handle whose
+    unpersist fails for any other reason raises to the caller."""
+    import pytest
+
+    class _Broken:
+        def unpersist(self):
+            raise RuntimeError("unrelated unpersist failure")
+
+    key = (E._app_key(spark), "stub-sf", "stub-query")
+    E._QUERY_PERSISTS[key] = [_Broken()]
+    try:
+        with pytest.raises(RuntimeError, match="unrelated unpersist failure"):
+            E.release_caches(spark)
+    finally:
+        E._QUERY_PERSISTS.pop(key, None)
+
+
+_STOPPED_CHILD = r"""
+import sys
+sys.path.insert(0, {repo!r})
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import SparkSession
+import __spark_entry__ as E
+spark = (
+    SparkSession.builder.master("local[1]")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+)
+spark.sparkContext.setLogLevel("ERROR")
+tracked = spark.range(10).persist()
+probe = spark.range(20).persist()
+tracked.count()
+probe.count()
+E._track_persists(spark, "sf", "q", tracked)
+# stop the SparkContext under a live Python session handle
+spark.sparkContext._jsc.sc().stop()
+try:
+    probe.unpersist()
+    print("UNPERSIST_OK")
+except Py4JJavaError:
+    print("UNPERSIST_RAISES Py4JJavaError")
+print("RELEASED", E.release_caches(spark), len(E._QUERY_PERSISTS))
+"""
+
+
+def test_release_caches_on_stopped_session():
+    """On a stopped SparkContext, unpersist raises ``Py4JJavaError``
+    (the block manager is gone); release_caches absorbs exactly that,
+    drops the handle from tracking and counts it as not released. Runs
+    in a child process: stopping the context would end the shared test
+    session."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    r = subprocess.run(
+        [sys.executable, "-c", _STOPPED_CHILD.format(repo=repo)],
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    lines = r.stdout.splitlines()
+    assert "UNPERSIST_RAISES Py4JJavaError" in lines, r.stderr[-2000:]
+    assert "RELEASED 0 0" in lines, r.stderr[-2000:]
+
+
+def test_driver_query_window_is_pinned():
+    """The driver checks at most 50 queries, and every declared query
+    has a DuckDB twin: a 51st entry would silently leave one unchecked."""
+    assert len(E.queries()) <= 50
+    assert set(E.queries()) == set(E.oracle_sql())

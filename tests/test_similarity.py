@@ -223,43 +223,122 @@ def test_ivf_index_query_matches_stateless(spark):
         idx.unpersist()
 
 
-def test_with_cells_arrow_matches_expression_form(spark):
-    """Round 19: the vectorized mapInArrow cell assigner must agree
-    row-for-row with the pure-expression ``with_cells`` — including
-    the NULL-degrade paths (NULL vector, NULL element, ragged width)
-    and exact-tie behavior (first minimum wins). The expression form
-    is the semantics oracle here; the arrow form is the plan shape
-    ``ivf_index`` ships by default."""
+def _duck_cells(rows, cents):
+    """DuckDB twin of ``with_cells``: the ``assigned`` CTE shape of
+    ``ann_ivf_topk_sql`` (exact integer squared distance, ties to the
+    lowest cell id) over ``(vec_id, __q)`` rows. Returns
+    {vec_id: cell} for the rows with a non-NULL ``__q``."""
+    import duckdb
+    import pyarrow as pa
+
+    z = pa.table(
+        {
+            "vec_id": pa.array([r[0] for r in rows], pa.int64()),
+            "__q": pa.array([r[1] for r in rows], pa.list_(pa.int64())),
+        }
+    )
+    cent_values = ", ".join(
+        f"({i}, [{', '.join(str(v) for v in c)}]::BIGINT[])"
+        for i, c in enumerate(cents)
+    )
+    dist = similarity._SQDIST_DUCK.format(a="z.__q", b="c.__c", n=len(cents[0]))
+    con = duckdb.connect()
+    con.register("z_rows", z)
+    return dict(
+        con.execute(
+            f"""
+WITH cents(cell, __c) AS (VALUES {cent_values})
+SELECT vec_id, cell FROM (
+  SELECT z.vec_id, c.cell,
+         row_number() OVER (PARTITION BY z.vec_id ORDER BY {dist}, c.cell) AS arn
+  FROM z_rows z CROSS JOIN cents c
+  WHERE z.__q IS NOT NULL) a
+WHERE arn = 1"""
+        ).fetchall()
+    )
+
+
+def test_with_cells_matches_duckdb_assignment(spark):
+    """The mapInArrow cell assigner picks the DuckDB twin's cell for
+    every clean row, on both the vectorized (all-clean batch) and the
+    row-at-a-time (batch holding a NULL) path; poison rows (NULL
+    vector, NULL element, ragged short and long widths) get a NULL
+    cell; exact ties go to the lowest tied cell id. The codebook
+    repeats centroid 1 as its last cell, so every row nearest to
+    centroid 1 is an exact tie that must resolve to cell 1."""
     df, _ = emb_frame(spark, n=50)
     cents = similarity.ivf_codebook(df, n_clusters=4)
-    q = similarity.quantized(df).select("vec_id", "__q", "__norm")
-    # poison/edge rows: NULL vector, NULL element, ragged (short and
-    # long) widths — every one must land cell=NULL on both paths; plus
-    # an exact-tie row (equidistant to >=2 centroids after the update
-    # — forced by duplicating a centroid's own coordinates as __q)
+    tie_cents = cents + [cents[1]]
     dim = len(cents[0])
+    q = similarity.quantized(df).select("vec_id", "__q", "__norm")
+    schema = "vec_id long, __q array<long>, __norm double"
+    # one all-clean single-row batch: an exact tie on the vectorized path
+    tie_fast = spark.createDataFrame(
+        [(1005, [int(v) for v in cents[1]], 1.0)], schema
+    ).coalesce(1)
+    # one batch holding NULLs: every row takes the row-at-a-time path
     edge = spark.createDataFrame(
         [
             (1000, None, None),
             (1001, [None] + [0] * (dim - 1), None),
             (1002, [0] * (dim - 1), 0.0),
             (1003, [0] * (dim + 1), 0.0),
-            (1004, [int(v) for v in cents[0]], 1.0),
+            (1004, [int(v) for v in cents[1]], 1.0),
         ],
-        "vec_id long, __q array<long>, __norm double",
-    )
-    allq = q.unionByName(edge)
+        schema,
+    ).coalesce(1)
+    allq = q.unionByName(tie_fast).unionByName(edge)
     got = {
         r.vec_id: r.cell
-        for r in similarity.with_cells_arrow(allq, cents).collect()
+        for r in similarity.with_cells(allq, tie_cents).collect()
     }
-    want = {
-        r.vec_id: r.cell for r in similarity.with_cells(allq, cents).collect()
-    }
-    assert got == want
+    clean = [(r.vec_id, r["__q"]) for r in q.unionByName(tie_fast).collect()]
+    clean.append((1004, [int(v) for v in cents[1]]))
+    want = _duck_cells(clean, tie_cents)
+    assert {v: got[v] for v in want} == want
     assert got[1000] is None and got[1001] is None
     assert got[1002] is None and got[1003] is None
-    assert got[1004] is not None
+    assert got[1004] == 1 and got[1005] == 1
+    assert len(tie_cents) - 1 not in got.values()
+
+
+def _assert_rejects_empty_codebook(spark, group, fn):
+    """``fn`` raises the empty-codebook ValueError at plan build,
+    before any Spark job starts."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(ValueError, match="empty IVF codebook"):
+            fn()
+    finally:
+        sc.setJobGroup(None, None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_ivf_index_rejects_empty_codebook(spark):
+    df, _ = emb_frame(spark, n=10)
+    _assert_rejects_empty_codebook(
+        spark, "ivf-index-empty", lambda: similarity.ivf_index(df, [])
+    )
+
+
+def test_ivf_query_rejects_empty_codebook(spark):
+    df, _ = emb_frame(spark, n=10)
+    idx = similarity.ivf_index(df, [[0] * 64])
+    _assert_rejects_empty_codebook(
+        spark,
+        "ivf-query-empty",
+        lambda: similarity.ivf_query(idx, df.where("vec_id < 2"), []),
+    )
+
+
+def test_ann_ivf_topk_rejects_empty_codebook(spark):
+    df, _ = emb_frame(spark, n=10)
+    _assert_rejects_empty_codebook(
+        spark,
+        "ann-ivf-topk-empty",
+        lambda: similarity.ann_ivf_topk(df, n_queries=2, centroids=[]),
+    )
 
 
 def _recall_vs_brute(spark, df, n_queries, topk, **ann_kwargs):
@@ -416,9 +495,27 @@ def test_int8_cosine_topk_close_to_exact_and_twin_parity(spark, sf_dir):
     ]
 
 
+def _rp_py(vec, planes):
+    """Pure-Python twin of ``rp_project`` for one embedding: quantize
+    to micro-units, then one exact integer dot per ±1 plane. A NULL
+    vector, a NULL/non-finite/out-of-bound element, or a width other
+    than the planes' projects to None. (Python's round() is
+    half-to-even where Spark's is half-up; no test vector lands on a
+    half micro-unit.)"""
+    import math
+
+    bound = similarity._q_elem_bound(similarity._DIM) / similarity._SCALE
+    if vec is None or len(vec) != len(planes[0]):
+        return None
+    if any(x is None or not math.isfinite(x) or abs(x) > bound for x in vec):
+        return None
+    q = [round(x * similarity._SCALE) for x in vec]
+    return [sum(a * b for a, b in zip(q, plane)) for plane in planes]
+
+
 def test_rp_project_exact_integer_projection(spark):
-    """The sign projection is EXACT long arithmetic: Spark's per-row
-    fold must equal a pure-Python dot of the micro-unit quantized
+    """The sign projection is EXACT long arithmetic: Spark's batched
+    matmul must equal a pure-Python dot of the micro-unit quantized
     vector with the same md5-derived ±1 planes."""
     from sales_analytics_etl_sql_powerbi_spark.operators import similarity as S
 
@@ -432,24 +529,14 @@ def test_rp_project_exact_integer_projection(spark):
     planes = S.hyperplanes(out_dim)
     got = {r.vec_id: list(r.rp) for r in S.rp_project(emb, out_dim).collect()}
     for vid, v in vecs:
-        q = [round(x * 1_000_000) for x in v]
-        expect = [sum(a * b for a, b in zip(q, plane)) for plane in planes]
-        assert got[vid] == expect
-    # the pure-JVM fold witness returns the identical table
-    fold = {
-        r.vec_id: list(r.rp)
-        for r in S.rp_project(emb, out_dim, impl="fold").collect()
-    }
-    assert fold == got
-    # NULL embedding -> NULL projection, both impls (convention pin).
-    # An all-NULL frame has no inferable width (round 16), so the
-    # contract requires declaring one.
+        assert got[vid] == _rp_py(v, planes)
+    # NULL embedding -> NULL projection (convention pin). An all-NULL
+    # frame has no inferable width (round 16), so the contract
+    # requires declaring one.
     withnull = spark.createDataFrame(
         [(9, None)], "vec_id long, embedding array<double>"
     )
-    for impl in ("arrow", "fold"):
-        r = S.rp_project(withnull, out_dim, impl=impl, dim=64).collect()[0]
-        assert r.rp is None
+    assert S.rp_project(withnull, out_dim, dim=64).collect()[0].rp is None
 
 
 def test_rp_cosine_topk_shortlist_contains_rerank_targets(spark):
@@ -740,19 +827,20 @@ def test_nonfinite_vectors_never_crash_or_match(spark):
         assert q[i][0] is None or None in q[i][0]
     assert q[0][0][0] == 1_000_000 and abs(q[0][1] - 1_000_000.0) < 1e-6
 
-    # partial-poison cell semantics (VERDICT r14 item 1): the IVF
-    # assignment's dists array is all-NULL for a poison row,
-    # array_min is NULL, array_position returns NULL (no ANSI error),
-    # and the NULL cell never survives the probe equi-join
+    # partial-poison cell semantics (VERDICT r14 item 1): a poison row
+    # gets a NULL cell (no error), which never survives the probe
+    # equi-join; clean rows get the DuckDB twin's nearest cell
+    cents = [[0] * 64, [1_000_000] * 64]
     cells = {
         r["vec_id"]: r["cell"]
         for r in similarity.with_cells(
-            similarity.quantized(emb), [[0] * 64, [1_000_000] * 64]
+            similarity.quantized(emb).select("vec_id", "__q"), cents
         ).collect()
     }
     for i in poison:
         assert cells[i] is None
-    assert all(cells[i] is not None for i in (0, 2, 3))
+    want = _duck_cells([(i, q[i][0]) for i in (0, 2, 3)], cents)
+    assert {i: cells[i] for i in (0, 2, 3)} == want
 
     top = similarity.cosine_topk(emb, n_queries=1, topk=3).collect()
     assert [r.vec_id for r in top[:2]] == [2, 3]
@@ -766,10 +854,17 @@ def test_nonfinite_vectors_never_crash_or_match(spark):
     assert [r.vec_id for r in i8[:2]] == [2, 3]
     assert all(r.cosine is None for r in i8 if r.vec_id in poison)
 
-    # rp: both impls project poison to NULL (parity), topk filters them
-    for impl in ("arrow", "fold"):
-        got = {r.vec_id: r.rp for r in similarity.rp_project(emb, out_dim=8, impl=impl).collect()}
-        assert all(got[i] is None for i in poison), impl
+    # rp: poison projects to NULL, clean rows to the pure-Python
+    # projection (float32 storage widened to double, as Spark does);
+    # topk filters the poison rows
+    planes = similarity.hyperplanes(8)
+    got = {r.vec_id: r.rp for r in similarity.rp_project(emb, out_dim=8).collect()}
+    for vid, v in rows:
+        v32 = None if v is None else [
+            None if x is None else float(np.float32(x)) for x in v
+        ]
+        assert got[vid] == _rp_py(v32, planes), vid
+    assert all(got[i] is None for i in poison)
     rp = similarity.rp_cosine_topk(emb, out_dim=8, n_queries=1, topk=5).collect()
     assert all(r.vec_id not in poison for r in rp)
     sh = similarity.shortlisted_cosine_topk(
@@ -866,17 +961,13 @@ def test_hyperplane_paths_reject_dim_mismatch_loudly(spark):
     the corpus — any-width corpora work unmodified — while an
     EXPLICIT dim keeps the loud mismatch raise on every hyperplane
     path (a declared width IS the caller's contract)."""
-    emb = spark.createDataFrame(
-        [(0, [0.1] * 6), (1, [0.2] * 6), (2, [0.3] * 6)],
-        "vec_id long, embedding array<double>",
-    )
+    rows = [(0, [0.1] * 6), (1, [0.2] * 6), (2, [0.3] * 6)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     # explicit-but-wrong dim raises at plan build on every path
     with pytest.raises(Exception, match="embedding width"):
         similarity.ann_lsh_topk(emb, n_queries=1, topk=2, dim=64).collect()
     with pytest.raises(Exception, match="width"):
-        similarity.rp_project(emb, out_dim=4, impl="fold", dim=64).collect()
-    with pytest.raises(Exception, match="width"):
-        similarity.rp_project(emb, out_dim=4, impl="arrow", dim=64).collect()
+        similarity.rp_project(emb, out_dim=4, dim=64).collect()
     # the quantization-gate envelope is sized at _DIM: wider corpora
     # must be refused at plan build, not overflow at runtime
     with pytest.raises(ValueError, match="safe envelope"):
@@ -887,21 +978,13 @@ def test_hyperplane_paths_reject_dim_mismatch_loudly(spark):
         similarity.lsh_buckets(emb, 4, validate_dim=False)
     # with the matching dim, the same corpus works on every path
     assert similarity.ann_lsh_topk(emb, n_queries=1, topk=2, dim=6).count() > 0
-    assert (
-        similarity.rp_project(emb, out_dim=4, impl="fold", dim=6)
-        .where("rp is not null")
-        .count()
-        == 3
-    )
-    got_arrow = {
+    planes = similarity.hyperplanes(4, 6)
+    got = {
         r.vec_id: r.rp
-        for r in similarity.rp_project(emb, out_dim=4, impl="arrow", dim=6).collect()
+        for r in similarity.rp_project(emb, out_dim=4, dim=6).collect()
     }
-    got_fold = {
-        r.vec_id: r.rp
-        for r in similarity.rp_project(emb, out_dim=4, impl="fold", dim=6).collect()
-    }
-    assert got_arrow == got_fold
+    assert got == {i: _rp_py(v, planes) for i, v in rows}
+    assert all(v is not None for v in got.values())
     # poison rows still degrade (NULL bucket path), never raise
     laced = spark.createDataFrame(
         [(0, [0.1] * 6), (1, [float("nan")] * 6), (2, None)],
@@ -925,19 +1008,17 @@ def test_hyperplane_dim_inferred_from_corpus(spark):
     exp = similarity.ann_lsh_topk(emb, n_queries=2, topk=3, dim=6).collect()
     assert [tuple(r) for r in inf] == [tuple(r) for r in exp] and inf
 
-    # rp_project, both impls
-    for impl in ("arrow", "fold"):
-        got_inf = {
-            r.vec_id: r.rp
-            for r in similarity.rp_project(emb, out_dim=4, impl=impl).collect()
-        }
-        got_exp = {
-            r.vec_id: r.rp
-            for r in similarity.rp_project(
-                emb, out_dim=4, impl=impl, dim=6
-            ).collect()
-        }
-        assert got_inf == got_exp and all(v is not None for v in got_inf.values())
+    # rp_project: inferred ≡ explicit ≡ the pure-Python projection
+    planes = similarity.hyperplanes(4, 6)
+    got_inf = {
+        r.vec_id: r.rp for r in similarity.rp_project(emb, out_dim=4).collect()
+    }
+    got_exp = {
+        r.vec_id: r.rp
+        for r in similarity.rp_project(emb, out_dim=4, dim=6).collect()
+    }
+    assert got_inf == got_exp == {i: _rp_py(v, planes) for i, v in rows}
+    assert all(v is not None for v in got_inf.values())
 
     # semantic_contamination infers from the corpus side and still
     # VALIDATES the eval side (a mismatched eval frame raises loudly)
@@ -955,19 +1036,19 @@ def test_hyperplane_dim_inferred_from_corpus(spark):
         similarity.embedding_neardup_pairs(emb, threshold=0.99).count() > 0
     )
 
-    # a RAGGED row past the sampled one degrades to NULL on BOTH
-    # rp impls (ADVICE r15 medium: arrow used to kill the job where
-    # fold degraded) — parity-pinned
+    # a RAGGED row past the sampled one degrades to NULL (ADVICE r15
+    # medium: it used to kill the job); the full-width rows still
+    # project exactly
+    ragged_rows = [(0, [0.1] * 6), (1, [0.2] * 4), (2, [0.3] * 6)]
     ragged = spark.createDataFrame(
-        [(0, [0.1] * 6), (1, [0.2] * 4), (2, [0.3] * 6)],
-        "vec_id long, embedding array<double>",
+        ragged_rows, "vec_id long, embedding array<double>"
     )
-    for impl in ("arrow", "fold"):
-        got = {
-            r.vec_id: r.rp
-            for r in similarity.rp_project(ragged, out_dim=4, impl=impl).collect()
-        }
-        assert got[1] is None and got[0] is not None and got[2] is not None
+    got = {
+        r.vec_id: r.rp
+        for r in similarity.rp_project(ragged, out_dim=4).collect()
+    }
+    assert got == {i: _rp_py(v, planes) for i, v in ragged_rows}
+    assert got[1] is None and got[0] is not None and got[2] is not None
 
     # all-NULL corpus: inference raises with instructions (bounded
     # peek found nothing), explicit dim is trusted and degrades

@@ -185,13 +185,6 @@ def test_scan_spread_parallelizes_row_group_starved_files(spark, sf_dir):
     # per-call opt-out
     raw = read_table(spark, sf_dir, "documents", spread=False)
     assert raw.rdd.getNumPartitions() == 1
-    # conf kill-switch (plan tests that pin the at-scale shape use it)
-    spark.conf.set("spark_graft.scan.rowsPerSlice", "0")
-    try:
-        off = read_table(spark, sf_dir, "documents")
-        assert off.rdd.getNumPartitions() == 1
-    finally:
-        spark.conf.unset("spark_graft.scan.rowsPerSlice")
     # value identity across the spread
     a = sorted(map(tuple, docs.select("doc_id").collect()))
     b = sorted(map(tuple, raw.select("doc_id").collect()))
